@@ -141,21 +141,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    """Load the driver test tables as DataFrames."""
-    return {
-        n: (load_events(spark, sf_dir) if n == "events" else spark.read.parquet(f"{sf_dir}/{n}.parquet"))
-        for n in names
-    }
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
-    """Register each test table as a temp view so ``spark.sql`` entry points
-    (Vector SQL dialect, plain SQL) see the same names DuckDB's oracle does."""
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)
-
-
 # --- Reference-shaped table configs (SURVEY §1.2) ---------------------------
 
 WIKIPEDIA = TableConfig(

@@ -33,8 +33,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-LONG_MAX = 9223372036854775807
-
 
 # --- building blocks ----------------------------------------------------------
 
@@ -232,21 +230,6 @@ def _spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         return df.repartition(sc.defaultParallelism)
     return df
-
-
-def minhash_signature(shingles, num_hashes: int = 128) -> Column:
-    """MinHash signature, all-JVM variant: per hash seed i, min over
-    shingles of xxhash64(i, shingle). Correct but interpreted (nested
-    higher-order lambdas don't codegen): O(H·S) lambda frames per row makes
-    it ~50× slower than :func:`minhash_band_keys_udf` — kept for reference
-    and tiny inputs; the LSH operator uses the vectorized path."""
-    sh = F.col(shingles) if isinstance(shingles, str) else shingles
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(num_hashes)),
-        lambda i: F.aggregate(
-            sh, F.lit(LONG_MAX), lambda acc, s: F.least(acc, F.xxhash64(i, s))
-        ),
-    )
 
 
 def minhash_band_keys_udf(num_hashes: int = 128, rows_per_band: int = 2):

@@ -19,6 +19,28 @@ def _t(i):
     return _TS + datetime.timedelta(minutes=i)
 
 
+def _two_wave_store(spark, df, key_col: str, prefix: str, merge, *args, **kwargs):
+    """Feed ``df`` to a streamed state as two availableNow drains over a
+    fresh temp dir: the rows with ``key_col`` at or below its approximate
+    median land as the first file, the rest arrive after the first drain
+    has finished. Each drain is ``merge(spark, in_dir, store,
+    checkpoint_dir, *args, **kwargs)`` into the VersionedParquetStore that
+    is returned."""
+    import os
+
+    from chatdata_spark.stores.state import VersionedParquetStore
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    ind, ckpt = f"{root}/in", f"{root}/ck"
+    os.makedirs(ind)
+    store = VersionedParquetStore(spark, f"{root}/store")
+    mid = df.agg(F.expr(f"percentile_approx({key_col}, 0.5)")).collect()[0][0]
+    for wave in (F.col(key_col) <= mid, F.col(key_col) > mid):
+        df.filter(wave).coalesce(1).write.mode("append").parquet(ind)
+        merge(spark, ind, store, ckpt, *args, **kwargs)
+    return store
+
+
 @query(
     "store_session_lifecycle",
     oracle="""
@@ -670,28 +692,20 @@ def streaming_cms_user_frequency(spark, sf_dir):
     exact equality proves both the merge law under real micro-batch
     splits and the checkpoint's exactly-once file accounting (a dropped
     or double-counted file shifts every affected cell)."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.cms import cms_estimate
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_cms_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_scms_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     ev = (
         load_events(spark, sf_dir)
         .filter(F.col("user_id") < 30)
         .select("event_id", "user_id")
     )
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, user_id long"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_cms_merge(spark, ind, store, ckpt, "user_id", schema)
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_cms_merge(spark, ind, store, ckpt, "user_id", schema)
+    store = _two_wave_store(
+        spark, ev, "event_id", "chatdata_scms_q_",
+        stream_cms_merge, "user_id", schema,
+    )
     top = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("true_cnt"))
@@ -727,8 +741,6 @@ def streaming_drift_psi(spark, sf_dir):
     psi_from_counts arithmetic as the batch query. The oracle is the
     batch PSI oracle verbatim, so exact equality proves the merge law
     under real micro-batch splits AND the replay accounting."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.drift import (
         fixed_bin_edges,
@@ -736,7 +748,6 @@ def streaming_drift_psi(spark, sf_dir):
         psi_from_counts,
     )
     from chatdata_spark.queries.quality import _PSI_BINS, _PSI_SPLIT
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_histogram_merge
 
     e = load_events(spark, sf_dir)
@@ -749,21 +760,14 @@ def streaming_drift_psi(spark, sf_dir):
     ).collect()[0]
     edges = fixed_bin_edges(row.lo, row.hi, _PSI_BINS)
 
-    root = tempfile.mkdtemp(prefix="chatdata_sdrift_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, value double"
-    mid = cur.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    cur.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_histogram_merge(spark, ind, store, ckpt, "value", schema, edges)
-    cur.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_histogram_merge(spark, ind, store, ckpt, "value", schema, edges)
-
+    store = _two_wave_store(
+        spark, cur, "event_id", "chatdata_sdrift_q_",
+        stream_histogram_merge, "value", schema, edges,
+    )
     rc = hist_counts(ref, "value", edges, out="n_ref")
     cc = store.read().select("bin", F.col("n").alias("n_cur"))
     return psi_from_counts(rc, cc, len(edges))
-
 
 
 def _shared_qsk_oracle() -> str:
@@ -788,28 +792,16 @@ def streaming_quantile_sketch(spark, sf_dir):
     exactly — proving the merge law under real micro-batch splits AND the
     checkpoint's exactly-once file accounting (a dropped file shifts the
     sample; a replayed one is absorbed)."""
-    import os
-
     from chatdata_spark.operators.quantsketch import sketch_quantiles
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_quantile_sample_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_sqsk_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderpriority", "o_orderkey", "o_totalprice"
     )
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "o_orderpriority string, o_orderkey long, o_totalprice double"
-    mid = o.agg(F.expr("percentile_approx(o_orderkey, 0.5)")).collect()[0][0]
-    o.filter(F.col("o_orderkey") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_quantile_sample_merge(
-        spark, ind, store, ckpt, ["o_orderpriority"], "o_totalprice", "o_orderkey", schema
-    )
-    o.filter(F.col("o_orderkey") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_quantile_sample_merge(
-        spark, ind, store, ckpt, ["o_orderpriority"], "o_totalprice", "o_orderkey", schema
+    store = _two_wave_store(
+        spark, o, "o_orderkey", "chatdata_sqsk_q_",
+        stream_quantile_sample_merge, ["o_orderpriority"], "o_totalprice", "o_orderkey", schema,
     )
     return sketch_quantiles(
         store.read(), ["o_orderpriority"], [0.25, 0.5, 0.75, 0.95]
@@ -846,23 +838,15 @@ def streaming_heavy_hitter_tokens(spark, sf_dir):
     merge bound under real micro-batch splits AND the checkpoint's
     exactly-once accounting (a dropped file deflates a count below 300;
     a double-counted one inflates a tail token above it)."""
-    import os
-
     from chatdata_spark.operators.heavyhitters import token_stream
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_mg_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_smg_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "doc_id long, text string"
-    mid = d.agg(F.expr("percentile_approx(doc_id, 0.5)")).collect()[0][0]
-    d.filter(F.col("doc_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, lambda b: token_stream(b, "text"), schema)
-    d.filter(F.col("doc_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, lambda b: token_stream(b, "text"), schema)
+    store = _two_wave_store(
+        spark, d, "doc_id", "chatdata_smg_q_",
+        stream_mg_merge, lambda b: token_stream(b, "text"), schema,
+    )
     cands = store.read().select("item")
     toks = token_stream(d, "text")
     return (
@@ -897,18 +881,11 @@ def streaming_heavy_hitter_revenue(spark, sf_dir):
     the exact decimal candidate recount. Batch-parity with the exact
     GROUP BY proves the weighted merge bound under real micro-batch
     splits AND exactly-once file accounting."""
-    import os
-
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_mg_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_swmg_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_extendedprice", "l_discount"
     )
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "l_orderkey long, l_partkey long, l_extendedprice double, l_discount double"
 
     def rev_items(b):
@@ -918,11 +895,10 @@ def streaming_heavy_hitter_revenue(spark, sf_dir):
             .filter(F.col("__w").isNotNull() & (F.col("__w") >= 0))
         )
 
-    mid = li.agg(F.expr("percentile_approx(l_orderkey, 0.5)")).collect()[0][0]
-    li.filter(F.col("l_orderkey") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, rev_items, schema, k=4096, weighted=True)
-    li.filter(F.col("l_orderkey") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_mg_merge(spark, ind, store, ckpt, rev_items, schema, k=4096, weighted=True)
+    store = _two_wave_store(
+        spark, li, "l_orderkey", "chatdata_swmg_q_",
+        stream_mg_merge, rev_items, schema, k=4096, weighted=True,
+    )
     cands = store.read().select("item")
     rev = rev_items(li)
     return (
@@ -960,31 +936,19 @@ def streaming_zscore_anomaly(spark, sf_dir):
     outliers with the all-integer predicate, so exact equality with the
     batch oracle proves the merge law under real micro-batch splits AND
     the checkpoint's exactly-once file accounting."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.moments import zscore_report
     from chatdata_spark.queries.quality import _zscore_v100
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_moments_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_szs_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("value").isNotNull() & F.col("event_type").isNotNull()
     )
     ev = e.select("event_id", "event_type", "value")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, value double"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_moments_merge(
-        spark, ind, store, ckpt, ["event_type"], _zscore_v100, schema
-    )
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_moments_merge(
-        spark, ind, store, ckpt, ["event_type"], _zscore_v100, schema
+    store = _two_wave_store(
+        spark, ev, "event_id", "chatdata_szs_q_",
+        stream_moments_merge, ["event_type"], _zscore_v100, schema,
     )
     return zscore_report(
         e,
@@ -992,7 +956,7 @@ def streaming_zscore_anomaly(spark, sf_dir):
         _zscore_v100(e),
         scale=100,
         z=3,
-        moments=store.read().drop("last_batch"),
+        moments=store.read(),
     ).orderBy("event_type")
 
 
@@ -1064,23 +1028,16 @@ def streaming_trend_ols(spark, sf_dir):
     checkpoint's exactly-once file accounting. The trending-metric
     monitor this enables never rescans history: day N's answer costs one
     micro-batch aggregate."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.timeseries import ols_from_moments
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_ols_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_strend_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("value").isNotNull()
         & F.col("event_type").isNotNull()
         & F.col("ts").isNotNull()
     )
     ev = e.select("event_id", "event_type", F.to_date("ts").alias("d"), "value")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, d date, value double"
 
     def xy(bdf):
@@ -1089,14 +1046,11 @@ def streaming_trend_ols(spark, sf_dir):
             (F.col("value").cast("decimal(18,2)") * F.lit(100)).cast("bigint"),
         )
 
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_ols_merge(spark, ind, store, ckpt, ["event_type"], xy, schema)
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_ols_merge(spark, ind, store, ckpt, ["event_type"], xy, schema)
-    return ols_from_moments(store.read().drop("last_batch"), y_scale=100).orderBy(
-        "event_type"
+    store = _two_wave_store(
+        spark, ev, "event_id", "chatdata_strend_q_",
+        stream_ols_merge, ["event_type"], xy, schema,
     )
+    return ols_from_moments(store.read(), y_scale=100).orderBy("event_type")
 
 
 def _shared_hll_oracle() -> str:
@@ -1122,28 +1076,19 @@ def streaming_hll_distinct(spark, sf_dir):
     AND the estimate: the streaming distinct-count whose answer is
     bit-identical to the batch one, at 2^p rows of state per group
     forever."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.hll import hll_estimate
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_hll_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_shll_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
     ev = e.select("event_id", "event_type", "user_id")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, user_id long"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_hll_merge(spark, ind, store, ckpt, ["event_type"], "user_id", schema, p=8, salt="hllu")
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_hll_merge(spark, ind, store, ckpt, ["event_type"], "user_id", schema, p=8, salt="hllu")
-
+    store = _two_wave_store(
+        spark, ev, "event_id", "chatdata_shll_q_",
+        stream_hll_merge, ["event_type"], "user_id", schema, p=8, salt="hllu",
+    )
     sk = hll_estimate(store.read(), ["event_type"], p=8, linear_correction=True)
     sk = sk.withColumn("hll_est", F.round("hll_est", 6))
     ex = (
@@ -1256,28 +1201,19 @@ def streaming_kmv_overlap(spark, sf_dir):
     |sketch| (n_distinct is consumed only through (n > k) comparisons),
     so the streamed which-audiences-overlap matrix is bit-identical to
     the batch sketch build the oracle replays in SQL."""
-    import os
-
     from chatdata_spark.catalog import load_events
     from chatdata_spark.operators.kmv import kmv_pairwise_overlap
-    from chatdata_spark.stores.state import VersionedParquetStore
     from chatdata_spark.streaming.incremental import stream_kmv_merge
 
-    root = tempfile.mkdtemp(prefix="chatdata_skmv_q_")
-    ind, ckpt = f"{root}/in", f"{root}/ck"
-    os.makedirs(ind)
     e = load_events(spark, sf_dir).filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
     ev = e.select("event_id", "event_type", "user_id")
-    store = VersionedParquetStore(spark, f"{root}/store")
     schema = "event_id long, event_type string, user_id long"
-    mid = ev.agg(F.expr("percentile_approx(event_id, 0.5)")).collect()[0][0]
-    ev.filter(F.col("event_id") <= mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_kmv_merge(spark, ind, store, ckpt, "event_type", "user_id", schema, k=64, salt="kmvu")
-    ev.filter(F.col("event_id") > mid).coalesce(1).write.mode("append").parquet(ind)
-    stream_kmv_merge(spark, ind, store, ckpt, "event_type", "user_id", schema, k=64, salt="kmvu")
-
+    store = _two_wave_store(
+        spark, ev, "event_id", "chatdata_skmv_q_",
+        stream_kmv_merge, "event_type", "user_id", schema, k=64, salt="kmvu",
+    )
     st = store.read()
     sk = st.groupBy("event_type").agg(
         F.array_sort(F.collect_list("h")).alias("sketch"),

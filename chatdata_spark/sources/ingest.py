@@ -17,7 +17,6 @@ real batch plumbing).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
@@ -167,10 +166,6 @@ def embed_and_validate(
     out = df.withColumn(vector_col, embedder_udf(embed_model, dim)(F.col(text_col)))
     valid, _rejected = validate_vector_dim(out, vector_col, dim)
     return valid
-
-
-def sha256_hex(s: str) -> str:
-    return hashlib.sha256(s.encode("utf-8")).hexdigest()
 
 
 def read_json_quarantine(

@@ -8,6 +8,11 @@ Pattern: file-source stream over an ingest directory → validate → embed
 deterministic test mode and the sane production batch-cadence mode (cron a
 drain instead of keeping executors hot). A watermarked windowed count
 shows the late-data-tolerant stats path for event streams.
+
+Every streaming query of the package drains through the helpers below:
+``drain_to_parquet`` for append-mode parquet sinks, ``drain_merge`` for
+the mergeable states kept in a VersionedParquetStore. A state supplies
+only its per-batch ``partial``, its ``combine`` and its replay class.
 """
 
 from __future__ import annotations
@@ -16,6 +21,71 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from chatdata_spark.functions.vector import make_embed_text_udf
+
+
+def _drain(writer, checkpoint_dir: str) -> None:
+    """Run ``writer`` once over every unseen file (``Trigger.AvailableNow``)
+    and block until the drain has committed its checkpoint and stopped."""
+    (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def drain_to_parquet(df, output_dir: str, checkpoint_dir: str) -> None:
+    """Drain the streaming ``df`` into an append-mode parquet sink at
+    ``output_dir``; the checkpoint makes each input file land exactly once."""
+    _drain(
+        df.writeStream.format("parquet").option("path", output_dir).outputMode("append"),
+        checkpoint_dir,
+    )
+
+
+def _drain_batches(spark: SparkSession, input_dir: str, schema: str, checkpoint_dir: str, apply_batch) -> None:
+    """Drain the parquet files under ``input_dir`` through
+    ``apply_batch(batch_df, batch_id)`` (foreachBatch, driver-side)."""
+    stream = spark.readStream.schema(schema).parquet(input_dir)
+    _drain(stream.writeStream.foreachBatch(apply_batch), checkpoint_dir)
+
+
+def drain_merge(
+    spark: SparkSession,
+    input_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    store,
+    partial,
+    combine,
+    additive: bool,
+) -> None:
+    """Fold each micro-batch of a file stream into a VersionedParquetStore
+    state: skip an empty batch, reduce it to ``partial(batch)``, merge that
+    with ``combine(state, part)`` (``state`` is None before the first
+    write) and commit the result as the store's next version.
+
+    ``additive`` is the state's replay class, declared here and nowhere
+    else. An ADDITIVE state (counts, moments) double-counts a re-delivered
+    batch, so each version carries its committing ``batch_id`` in the
+    sidecar meta — committed by the same atomic pointer swap as the data,
+    read back as ``read_meta()``'s scalar rather than a max over rows —
+    and a batch at or below it is skipped. An IDEMPOTENT state (lattice
+    joins, keep-latest upsert, SCD2 fold) absorbs a replay by construction
+    and writes no meta."""
+
+    def apply_batch(batch_df, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        part = partial(batch_df)
+        state = None
+        if store.exists():
+            if additive and store.read_meta().get("last_batch", -1) >= batch_id:
+                return  # replay of a committed batch — re-merging would double-count
+            state = store.read()
+        store.write(combine(state, part), meta={"last_batch": batch_id} if additive else None)
+
+    _drain_batches(spark, input_dir, schema, checkpoint_dir, apply_batch)
 
 
 def incremental_embed(
@@ -32,14 +102,7 @@ def incremental_embed(
     embedded = stream.filter(F.col("text").isNotNull()).withColumn(
         "vector", make_embed_text_udf(dim)(F.col("text"))
     )
-    (
-        embedded.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_to_parquet(embedded, output_dir, checkpoint_dir)
 
 
 def stream_upsert_into_store(
@@ -56,25 +119,13 @@ def stream_upsert_into_store(
     streaming twin of M1 — at warehouse scale the body becomes a Delta
     MERGE; the stream topology is unchanged). Checkpoint + versioned swap
     give effectively-once application of each batch."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    from chatdata_spark.operators.upsert import keep_latest
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if store.exists():
-            store.upsert(batch_df, key_cols, version_col)
-        else:
-            from chatdata_spark.operators.upsert import keep_latest
+    def combine(state, batch):
+        rows = batch if state is None else state.unionByName(batch)
+        return keep_latest(rows, key_cols, version_col)
 
-            store.write(keep_latest(batch_df, key_cols, version_col))
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, lambda b: b, combine, additive=False)
 
 
 def windowed_event_counts(
@@ -96,15 +147,7 @@ def windowed_event_counts(
         .agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("value").cast("decimal(27,6)")).cast("double").alias("total"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total")
     )
-    (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_to_parquet(agg, output_dir, checkpoint_dir)
 
 
 def stream_stream_interval_join(
@@ -156,15 +199,7 @@ def stream_stream_interval_join(
         ],
         "inner",
     ).select(left["k"].alias(key_col), "l_ts", "l_value", "r_ts", "r_value")
-    (
-        joined.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_to_parquet(joined, output_dir, checkpoint_dir)
 
 
 def stream_near_dup_pairs(
@@ -198,7 +233,6 @@ def stream_near_dup_pairs(
     against stored ids correctly no-ops it, and its pairs are already on
     disk. The streaming topology is the batch operator unchanged — the
     store IS the state, no applyInPandasWithState needed."""
-    stream = spark.readStream.schema(schema).parquet(input_dir)
 
     def apply_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -215,13 +249,7 @@ def stream_near_dup_pairs(
         pairs.write.mode("overwrite").parquet(f"{pairs_out_dir}/batch={b}")
         sig_store.commit_batch(b)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain_batches(spark, input_dir, schema, checkpoint_dir, apply_batch)
 
 
 def stream_cms_merge(
@@ -257,27 +285,11 @@ def stream_cms_merge(
     while the state itself was stale (ADVICE r8)."""
     from chatdata_spark.operators.cms import cms_build, cms_merge
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sk = cms_build(batch_df, item_col, depth=depth, width=width)
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-merging would double-count
-            merged = cms_merge(store.read().drop("last_batch"), sk)
-        else:
-            merged = sk
-        store.write(merged, meta={"last_batch": batch_id})
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_merge(
+        spark, input_dir, schema, checkpoint_dir, store,
+        lambda b: cms_build(b, item_col, depth=depth, width=width),
+        lambda state, sk: sk if state is None else cms_merge(state, sk),
+        additive=True,
     )
 
 
@@ -308,32 +320,14 @@ def stream_histogram_merge(
     batch is skipped."""
     from chatdata_spark.operators.drift import hist_counts
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    def combine(state, h):
+        if state is None:
+            return h
+        return state.unionByName(h).groupBy("bin").agg(F.sum("n").alias("n"))
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        h = hist_counts(batch_df, value_col, edges, out="n")
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-merging double-counts
-            merged = (
-                store.read().drop("last_batch")
-                .unionByName(h)
-                .groupBy("bin")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = h
-        store.write(merged, meta={"last_batch": batch_id})
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_merge(
+        spark, input_dir, schema, checkpoint_dir, store,
+        lambda b: hist_counts(b, value_col, edges, out="n"), combine, additive=True,
     )
 
 
@@ -363,22 +357,11 @@ def stream_quantile_sample_merge(
     exactly what the batch-parity oracle checks."""
     from chatdata_spark.operators.quantsketch import merge_samples, quantile_sample
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sk = quantile_sample(batch_df, group_cols, value_col, key_col, k=k, salt=salt)
-        if store.exists():
-            sk = merge_samples([store.read(), sk], group_cols, k=k)
-        store.write(sk)
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_merge(
+        spark, input_dir, schema, checkpoint_dir, store,
+        lambda b: quantile_sample(b, group_cols, value_col, key_col, k=k, salt=salt),
+        lambda state, sk: sk if state is None else merge_samples([state, sk], group_cols, k=k),
+        additive=False,
     )
 
 
@@ -417,26 +400,20 @@ def stream_mg_merge(
     the pointer swap, ADVICE r8) skips committed batches."""
     from pyspark.sql import Window
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def partial(batch_df):
         items = item_col_fn(batch_df)
         if weighted:
-            bc = items.groupBy("item").agg(
+            return items.groupBy("item").agg(
                 F.sum(F.col("__w").cast("decimal(27,6)")).alias("cnt")
             )
-        else:
-            bc = items.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-merging double-counts
-            prev = store.read().drop("last_batch")
+        return items.groupBy("item").agg(F.count(F.lit(1)).alias("cnt"))
+
+    def combine(state, bc):
+        merged = bc
+        if state is not None:
             merged = (
-                prev
-                .unionByName(bc.withColumn("cnt", F.col("cnt").cast(dict(prev.dtypes)["cnt"])))
+                state
+                .unionByName(bc.withColumn("cnt", F.col("cnt").cast(dict(state.dtypes)["cnt"])))
                 .groupBy("item")
                 .agg(F.sum("cnt").alias("cnt"))
             )
@@ -444,36 +421,16 @@ def stream_mg_merge(
                 # sum(decimal) widens precision each round — pin the store
                 # schema so round-N reads union cleanly with round-N+1 sums
                 merged = merged.withColumn("cnt", F.col("cnt").cast("decimal(27,6)"))
-        else:
-            merged = bc
-        w = Window.orderBy(F.desc("cnt"), F.asc("item"))
-        wall = Window.partitionBy()
-        ranked = merged.select(
-            "item", "cnt", F.row_number().over(w).alias("__rn")
-        )
-        compressed = (
-            ranked.select(
-                "item",
-                "cnt",
-                "__rn",
-                F.max(
-                    F.when(F.col("__rn") == F.lit(int(k) + 1), F.col("cnt"))
-                ).over(wall).alias("__m"),
-            )
-            .select(
-                "item", (F.col("cnt") - F.coalesce("__m", F.lit(0))).alias("cnt")
-            )
+        rn = F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("item")))
+        ranked = merged.select("item", "cnt", rn.alias("__rn"))
+        kth = F.max(F.when(F.col("__rn") == F.lit(int(k) + 1), F.col("cnt"))).over(Window.partitionBy())
+        return (
+            ranked.select("item", "cnt", kth.alias("__m"))
+            .select("item", (F.col("cnt") - F.coalesce("__m", F.lit(0))).alias("cnt"))
             .filter(F.col("cnt") > 0)
         )
-        store.write(compressed, meta={"last_batch": batch_id})
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, partial, combine, additive=True)
 
 
 def stream_moments_merge(
@@ -503,27 +460,11 @@ def stream_moments_merge(
     unlike worker closures)."""
     from chatdata_spark.operators.moments import exact_moments, merge_moments
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bm = exact_moments(batch_df, group_cols, int_col_fn(batch_df))
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-adding double-counts
-            merged = merge_moments([store.read().drop("last_batch"), bm], group_cols)
-        else:
-            merged = bm
-        store.write(merged, meta={"last_batch": batch_id})
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_merge(
+        spark, input_dir, schema, checkpoint_dir, store,
+        lambda b: exact_moments(b, group_cols, int_col_fn(b)),
+        lambda state, bm: bm if state is None else merge_moments([state, bm], group_cols),
+        additive=True,
     )
 
 
@@ -549,28 +490,11 @@ def stream_ols_merge(
     integer-valued (runs driver-side in foreachBatch)."""
     from chatdata_spark.operators.timeseries import merge_ols_moments, ols_moments
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        x, y = xy_col_fn(batch_df)
-        bm = ols_moments(batch_df, group_cols, x, y)
-        if store.exists():
-            applied = store.read_meta().get("last_batch")
-            if applied is not None and applied >= batch_id:
-                return  # replay of a committed batch — re-adding double-counts
-            merged = merge_ols_moments([store.read().drop("last_batch"), bm], group_cols)
-        else:
-            merged = bm
-        store.write(merged, meta={"last_batch": batch_id})
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_merge(
+        spark, input_dir, schema, checkpoint_dir, store,
+        lambda b: ols_moments(b, group_cols, *xy_col_fn(b)),
+        lambda state, bm: bm if state is None else merge_ols_moments([state, bm], group_cols),
+        additive=True,
     )
 
 
@@ -596,27 +520,18 @@ def stream_hll_merge(
     what the batch-parity oracle checks."""
     from chatdata_spark.operators.hll import hll_registers
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    def combine(state, regs):
+        if state is None:
+            return regs
+        return (
+            state.unionByName(regs)
+            .groupBy(*group_cols, "bucket")
+            .agg(F.min("min_tail").alias("min_tail"))
+        )
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        regs = hll_registers(batch_df, group_cols, key_col, p=p, salt=salt)
-        if store.exists():
-            regs = (
-                store.read()
-                .unionByName(regs)
-                .groupBy(*group_cols, "bucket")
-                .agg(F.min("min_tail").alias("min_tail"))
-            )
-        store.write(regs)
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain_merge(
+        spark, input_dir, schema, checkpoint_dir, store,
+        lambda b: hll_registers(b, group_cols, key_col, p=p, salt=salt), combine, additive=False,
     )
 
 
@@ -646,28 +561,12 @@ def stream_scd2_merge(
     the lattice merges (and unlike the additive moment/count states)."""
     from chatdata_spark.operators.scd import scd2_from_changelog, scd2_merge
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
+    def combine(history, batch):
+        if history is None:
+            return scd2_from_changelog(batch, key_cols, ts_col, tracked_cols, order_cols)
+        return scd2_merge(history, batch, key_cols, ts_col, tracked_cols, order_cols)
 
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if store.exists():
-            merged = scd2_merge(
-                store.read(), batch_df, key_cols, ts_col, tracked_cols, order_cols
-            )
-        else:
-            merged = scd2_from_changelog(
-                batch_df, key_cols, ts_col, tracked_cols, order_cols
-            )
-        store.write(merged)
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, lambda b: b, combine, additive=False)
 
 
 def stream_kmv_merge(
@@ -701,24 +600,20 @@ def stream_kmv_merge(
     surrogate and the streamed overlap matrix is bit-identical to the
     batch one (the batch-parity oracle's claim). State ≤ k rows/group
     forever; the per-batch exchange is the (group, hash) distinct."""
+    from pyspark.sql import Window
+
     from chatdata_spark.operators.sampling import hash_bucket
 
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bh = (
-            batch_df.select(
-                F.col(group_col), hash_bucket(F.col(elem_col), salt).alias("h")
-            )
+    def partial(batch_df):
+        return (
+            batch_df.select(F.col(group_col), hash_bucket(F.col(elem_col), salt).alias("h"))
             .distinct()
             .withColumn("sat", F.lit(False))
         )
-        if store.exists():
-            bh = store.read().unionByName(bh)
-        from pyspark.sql import Window
 
+    def combine(state, bh):
+        if state is not None:
+            bh = state.unionByName(bh)
         w = Window.partitionBy(group_col)
         merged = bh.groupBy(group_col, "h").agg(F.max("sat").alias("sat_row"))
         ranked = merged.select(
@@ -728,17 +623,10 @@ def stream_kmv_merge(
             F.count(F.lit(1)).over(w).alias("n"),
             F.max("sat_row").over(w).alias("sat_prev"),
         )
-        out = ranked.filter(F.col("rn") <= k).select(
+        return ranked.filter(F.col("rn") <= k).select(
             group_col,
             "h",
             (F.col("sat_prev") | (F.col("n") > k)).alias("sat"),
         )
-        store.write(out)
 
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_merge(spark, input_dir, schema, checkpoint_dir, store, partial, combine, additive=False)

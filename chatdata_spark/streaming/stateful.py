@@ -17,6 +17,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from chatdata_spark.streaming.incremental import drain_to_parquet
+
 
 def stream_distinct(
     spark: SparkSession,
@@ -86,15 +88,7 @@ def stream_distinct(
             GroupStateTimeout.EventTimeTimeout if use_ttl else GroupStateTimeout.NoTimeout
         ),
     )
-    (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_to_parquet(deduped, output_dir, checkpoint_dir)
 
 
 def stream_sessionize(
@@ -185,12 +179,4 @@ def stream_sessionize(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain_to_parquet(sessions, output_dir, checkpoint_dir)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from chatdata_spark.sources.ingest import (
     embed_and_validate,
@@ -426,3 +427,99 @@ def test_stream_kmv_merge_incremental_and_replay_idempotent(spark, tmp_path):
         got2.setdefault(r.g, []).append(r.h)
         sat2[r.g] = r.sat
     assert {g: sorted(v) for g, v in got2.items()} == want and sat2 == sat
+
+
+_REPLAY_SCHEMA = "id bigint, g string, k bigint, x bigint, ts timestamp"
+
+
+def _replay_wave(spark, lo: int, hi: int):
+    """Rows ``lo..hi-1``: three groups ``g``, five entity keys ``k`` whose
+    tracked ``g`` changes on every event, an integer value ``x`` and an
+    event time that grows with ``id`` (SCD2 needs event-time order)."""
+    import datetime
+
+    t0 = datetime.datetime(2023, 1, 1)
+    rows = [
+        (i, "abc"[i % 3], i % 5, (i * 37) % 101, t0 + datetime.timedelta(minutes=i))
+        for i in range(lo, hi)
+    ]
+    return spark.createDataFrame(rows, _REPLAY_SCHEMA)
+
+
+def _replay_states():
+    """name -> (additive, drain(spark, in_dir, store, checkpoint_dir)) for the
+    seven store states without a replay test of their own."""
+    from chatdata_spark.streaming import incremental as inc
+
+    s = _REPLAY_SCHEMA
+    return {
+        "upsert": (False, lambda sp, i, st, ck: inc.stream_upsert_into_store(sp, i, st, ["k"], "id", ck, s)),
+        "quantile_sample": (False, lambda sp, i, st, ck: inc.stream_quantile_sample_merge(
+            sp, i, st, ck, ["g"], "x", "id", s, k=4)),
+        "mg": (True, lambda sp, i, st, ck: inc.stream_mg_merge(
+            sp, i, st, ck, lambda b: b.select((F.col("x") % 7).cast("string").alias("item")), s, k=3)),
+        "moments": (True, lambda sp, i, st, ck: inc.stream_moments_merge(
+            sp, i, st, ck, ["g"], lambda b: F.col("x"), s)),
+        "ols": (True, lambda sp, i, st, ck: inc.stream_ols_merge(
+            sp, i, st, ck, ["g"], lambda b: (F.col("id"), F.col("x")), s)),
+        "hll": (False, lambda sp, i, st, ck: inc.stream_hll_merge(sp, i, st, ck, ["g"], "x", s, p=4)),
+        "scd2": (False, lambda sp, i, st, ck: inc.stream_scd2_merge(
+            sp, i, st, ck, ["k"], "ts", ["g"], ["id"], s)),
+    }
+
+
+@pytest.mark.parametrize("state", sorted(_replay_states()))
+def test_stream_store_replay_class(spark, tmp_path, state):
+    """Two drains, then a replay of every file under a fresh checkpoint
+    (foreachBatch re-delivers them all as batch 0). An ADDITIVE state must
+    skip the replay on its batch-id guard, so the store version does not
+    move; an IDEMPOTENT state applies it and must come out unchanged."""
+    from chatdata_spark.stores.state import VersionedParquetStore
+
+    additive, drain = _replay_states()[state]
+    ind = str(tmp_path / "in")
+    os.makedirs(ind)
+    store = VersionedParquetStore(spark, str(tmp_path / "store"))
+
+    def rows():
+        return sorted(repr(sorted(r.asDict().items())) for r in store.read().collect())
+
+    for lo, hi in ((0, 30), (30, 60)):
+        _replay_wave(spark, lo, hi).coalesce(1).write.mode("append").parquet(ind)
+        drain(spark, ind, store, str(tmp_path / "ck"))
+    assert store.current_version() == 2
+    before = rows()
+    assert before
+
+    drain(spark, ind, store, str(tmp_path / "ck2"))
+    assert store.current_version() == (2 if additive else 3)
+    assert rows() == before
+
+
+def test_streaming_drains_only_in_drain_helpers():
+    """Every availableNow trigger and foreachBatch sink in the package sits
+    inside the drain helpers of streaming/incremental.py, so a hand-copied
+    drain cannot creep back in."""
+    import ast
+    import pathlib
+
+    import chatdata_spark
+
+    root = pathlib.Path(chatdata_spark.__file__).parent
+    helpers = {"_drain", "_drain_batches", "drain_to_parquet", "drain_merge"}
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                    continue
+                attr = node.func.attr
+                if attr == "foreachBatch" or (
+                    attr == "trigger" and any(kw.arg == "availableNow" for kw in node.keywords)
+                ):
+                    where = getattr(top, "name", "<module>")
+                    found.add((path.relative_to(root).as_posix(), where, attr))
+    assert {attr for _, _, attr in found} == {"foreachBatch", "trigger"}
+    stray = {f for f in found if f[0] != "streaming/incremental.py" or f[1] not in helpers}
+    assert not stray, f"streaming drain outside the drain helpers: {sorted(stray)}"
